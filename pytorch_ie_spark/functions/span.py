@@ -59,6 +59,19 @@ def bio_tags_to_spans(
     return list(out)
 
 
+def label_slice_spans(
+    tags: list[str], label_start: int, label_end: int
+) -> list[tuple[str, tuple[int, int]]]:
+    """BIO-decode one window's tags, keeping only its label slice
+    [label_start, label_end): context tokens are masked to 'O', so
+    overlapping windows never double-report a span (the exactly-once
+    contract of src/pytorch_ie/utils/window.py:4-27)."""
+    masked = [
+        tag if label_start <= i < label_end else "O" for i, tag in enumerate(tags)
+    ]
+    return bio_tags_to_spans(masked)
+
+
 def io_tags_to_spans(
     tags: list[str],
     classes_to_ignore: Optional[list[str]] = None,

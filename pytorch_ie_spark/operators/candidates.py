@@ -18,8 +18,29 @@ SURVEY.md §4 row 1 — predicate placed before the expensive UDF on purpose).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def ordered_pair_indices(
+    starts, ends, max_distance: int | None = None
+) -> tuple[np.ndarray, np.ndarray]:
+    """(head_idx, tail_idx) of every ordered pair of one document's spans:
+    no self-pair, inner gap max(0, max(starts) - min(ends)) <= max_distance
+    (None = unbounded). Head-major order. The in-process twin of
+    `candidate_pairs` for the fused extractors, numpy-masked so a
+    document costs one vectorized call instead of a Python double loop."""
+    s = np.asarray(starts)
+    e = np.asarray(ends)
+    mask = ~np.eye(len(s), dtype=bool)
+    if max_distance is not None:
+        inner_gap = np.maximum(
+            0,
+            np.maximum(s[:, None], s[None, :]) - np.minimum(e[:, None], e[None, :]),
+        )
+        mask &= inner_gap <= max_distance
+    return np.nonzero(mask)
 
 
 def candidate_pairs(

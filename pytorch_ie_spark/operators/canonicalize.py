@@ -63,31 +63,6 @@ def _base_hash_col(shingle_col):
     )
 
 
-def _affine_min(hash_arr_col, idx: int):
-    """mh_idx = min over base hashes of (a*h + b) mod P — integer math only.
-    Factory (not inline lambda) so each component captures its own constants;
-    a 2-arg lambda to F.transform would be (element, index) and corrupt them."""
-    a, b = MINHASH_AB[idx]
-    return F.array_min(
-        F.transform(
-            hash_arr_col,
-            lambda h: (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME),
-        )
-    )
-
-
-def minhash_signature_cols(shingle_col, num_hashes: int = 16):
-    """Portable universal-hash MinHash (functions/hashing.py semantics):
-    component i = min over shingles of (a_i * int(md5(sh)[:8],16) + b_i) mod P.
-    NB: when several components are selected from the same projection the
-    md5 pass is inlined per component (CollapseProject treats transform() as
-    cheap) — use with_minhash_signature for the staged two-phase plan."""
-    return [
-        _affine_min(_base_hash_col(shingle_col), i).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-
-
 def _minhash_struct_col(shingle_col, num_hashes: int):
     """All components in ONE fold: aggregate over the base-hash array (the
     aggregate's input expression — the md5 pass — is evaluated once per row),
@@ -183,28 +158,6 @@ def _surface_band_stack(
     return base, stacked
 
 
-def lsh_dropped_surface_buckets(
-    surfaces: DataFrame,
-    surface_col: str = "surface_norm",
-    shingle_k: int = 3,
-    num_hashes: int = 16,
-    band_size: int = 4,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """(band_key, bucket_size) of the band buckets `lsh_candidate_edges`
-    drops under the same parameters — the surface-canonicalization twin of
-    dedup.lsh_dropped_buckets, so the `max_bucket` approximation is
-    auditable at runtime rather than only by a rerun diagnostic."""
-    _, stacked = _surface_band_stack(
-        surfaces, surface_col, shingle_k, num_hashes, band_size
-    )
-    return (
-        stacked.groupBy("band_key")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .where(F.col("bucket_size") > max_bucket)
-    )
-
-
 def lsh_candidate_edges(
     surfaces: DataFrame,
     surface_col: str = "surface_norm",
@@ -235,8 +188,8 @@ def _edges_from_stack(
     max_bucket: int | None,
 ) -> DataFrame:
     """Edges from a precomputed (base, stacked) band stack — split out so
-    canonicalize_mentions can share ONE stack between the dropped-bucket
-    audit and the candidate self-join instead of hashing twice."""
+    canonicalize_mentions can share ONE stack between its dropped-bucket
+    count and the candidate self-join instead of hashing twice."""
     if max_bucket is not None:
         # cap pathological buckets to avoid quadratic blowup on degenerate
         # keys — window count over band_key rides the self-join's shuffle
@@ -422,14 +375,14 @@ def canonicalize_mentions(
     This is a corpus-scale entry point, so the LSH quadratic-bucket guard is
     ON by default (`max_bucket=1000`: one degenerate band key otherwise makes
     the candidate self-join O(n^2)); pass None for the exact variant the
-    oracle-gated dedup queries use. When the cap engages, the dropped-bucket
-    count is logged at WARNING (one tiny aggregate job over the distinct
-    surfaces) so the approximation is observable at runtime; the full audit
-    table is `lsh_dropped_surface_buckets`.
+    oracle-gated dedup queries use. When the cap engages, the number of
+    dropped band buckets and the surface-band rows they cover are logged at
+    WARNING (one tiny aggregate job over the distinct surfaces), so the
+    approximation is observable at runtime.
     """
     # pin the distinct-surface table: the band stack, the singleton join,
     # and the final mention mapping all read it — unpinned, each action
-    # (bucket audit, CC edge materialization, the entity-map count) re-runs
+    # (bucket count, CC edge materialization, the entity-map count) re-runs
     # the full-mention dropDuplicates shuffle
     surfaces = (
         mentions.select(
@@ -438,9 +391,9 @@ def canonicalize_mentions(
         .dropDuplicates(["surface_norm"])
         .localCheckpoint(eager=False)
     )
-    # ONE band stack shared between the audit aggregate and the candidate
-    # self-join (the stack is localCheckpoint-pinned inside); the audit is
-    # one tiny extra aggregate over already-materialized rows
+    # ONE band stack shared between the dropped-bucket count and the
+    # candidate self-join (the stack is localCheckpoint-pinned inside); the
+    # count is one tiny extra aggregate over already-materialized rows
     base, stacked = _surface_band_stack(
         surfaces, "surface_norm", shingle_k, 16, 4
     )
@@ -459,8 +412,7 @@ def canonicalize_mentions(
             logger.warning(
                 "canonicalize_mentions: max_bucket=%d dropped %d band "
                 "bucket(s) covering %d surface-band rows — entity-id "
-                "assignment is approximate for those surfaces "
-                "(lsh_dropped_surface_buckets has the audit table)",
+                "assignment is approximate for those surfaces",
                 max_bucket, dropped["n_buckets"], dropped["n_rows"],
             )
     edges = _edges_from_stack(

@@ -226,10 +226,10 @@ def minhash_lsh_pairs(
     verified = prefiltered.join(src_sh, "src_id").join(dst_sh, "dst_id")
     inter = F.size(F.array_intersect(F.col("src_sh"), F.col("dst_sh")))
     union = F.size(F.col("src_sh")) + F.size(F.col("dst_sh")) - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("src_id", "dst_id", "jaccard")
+    ratio = inter / union
+    # threshold the raw ratio (as the SQL oracle does); round only the output
+    return verified.where(ratio >= jaccard_threshold).select(
+        "src_id", "dst_id", F.round(ratio, 6).alias("jaccard")
     )
 
 
@@ -421,16 +421,6 @@ def simhash_near_dup_pairs(
     )
 
 
-def simhash_duplicate_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Docs sharing an identical 16-bit simhash (cheap near-dup blocking)."""
-    s = simhash16(df, id_col, text_col)
-    return (
-        s.groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keep_id"))
-        .where(F.col("n_docs") > 1)
-    )
-
-
 def cross_corpus_near_dups(
     new_docs: DataFrame,
     index_docs: DataFrame,
@@ -497,10 +487,10 @@ def cross_corpus_near_dups(
     verified = pairs.join(new_sh, "new_id").join(idx_sh, "index_id")
     inter = F.size(F.array_intersect(F.col("new_sh"), F.col("idx_sh")))
     union = F.size("new_sh") + F.size("idx_sh") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .where(F.col("jaccard") >= jaccard_threshold)
-        .select("new_id", "index_id", "jaccard")
+    ratio = inter / union
+    # threshold the raw ratio (as the SQL oracle does); round only the output
+    return verified.where(ratio >= jaccard_threshold).select(
+        "new_id", "index_id", F.round(ratio, 6).alias("jaccard")
     )
 
 

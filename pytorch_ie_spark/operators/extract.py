@@ -18,16 +18,16 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..functions.span import bio_tags_to_spans
+from ..functions.span import label_slice_spans
 from ..functions.tokenize import tokenize_with_offsets
 from ..functions.window import enumerate_windows
 from ..functions.hashing import mention_id
+from .candidates import ordered_pair_indices
 from .models import resolve_model
+from .triples import dedupe_triples
 
 TRIPLE_ROWS_SCHEMA = (
     "doc_id string, subj string, pred string, obj string, "
@@ -79,40 +79,26 @@ def extract_triples_fused(
                     [tokens[ts:te] for (ts, te), _ in windows]
                 )
                 for ((ts, te), (ls, le)), tags in zip(windows, tags_batch):
-                    masked = [
-                        tag if ls <= i < le else "O" for i, tag in enumerate(tags)
-                    ]
-                    for label, (s_tok, e_tok) in bio_tags_to_spans(masked):
+                    for label, (s_tok, e_tok) in label_slice_spans(tags, ls, le):
                         spans.add(
                             (starts[ts + s_tok], ends[ts + e_tok], label)
                         )
                 if len(spans) < 2:
                     continue
                 ms = sorted(spans)
-                s_arr = np.array([m[0] for m in ms])
-                e_arr = np.array([m[1] for m in ms])
-                # numpy-masked ordered pair enumeration (BOTH directions,
-                # like the staged candidate_pairs operator — reversed
-                # relations such as org:founded_by need head-after-tail)
-                # with the inner-distance bound
-                inner_gap = np.maximum(
-                    0,
-                    np.maximum(s_arr[:, None], s_arr[None, :])
-                    - np.minimum(e_arr[:, None], e_arr[None, :]),
+                # ordered pairs in BOTH directions, like the staged
+                # candidate_pairs operator — reversed relations such as
+                # org:founded_by need head-after-tail
+                h_idx, t_idx = ordered_pair_indices(
+                    [m[0] for m in ms], [m[1] for m in ms], max_distance
                 )
-                mask = np.ones_like(inner_gap, dtype=bool)
-                np.fill_diagonal(mask, False)
-                if max_distance is not None:
-                    mask &= inner_gap <= max_distance
-                h_idx, t_idx = np.nonzero(mask)
                 if len(h_idx) == 0:
                     continue
-                mlist = ms
-                heads = [(int(s_arr[i]), int(e_arr[i])) for i in h_idx]
-                tails = [(int(s_arr[i]), int(e_arr[i])) for i in t_idx]
+                heads = [(ms[i][0], ms[i][1]) for i in h_idx]
+                tails = [(ms[i][0], ms[i][1]) for i in t_idx]
                 preds = rel.predict_pairs(
                     [text] * len(heads),
-                    [mlist] * len(heads),
+                    [ms] * len(heads),
                     heads,
                     tails,
                     head_labels=[ms[i][2] for i in h_idx],
@@ -148,15 +134,7 @@ def extract_triples_fused(
     return projected.mapInPandas(process, schema=TRIPLE_ROWS_SCHEMA)
 
 
-def fused_triples(raw: DataFrame) -> DataFrame:
-    """Raw rows -> deduped triples (same output contract as
-    operators/triples.py dedupe_triples)."""
-    return (
-        raw.groupBy("subj", "pred", "obj", "doc_id")
-        .agg(
-            F.max("score").alias("score"),
-            F.min("head_mention_id").alias("head_mention_id"),
-            F.min("tail_mention_id").alias("tail_mention_id"),
-            F.first("content_sha256", ignorenulls=True).alias("content_sha256"),
-        )
-    )
+
+# raw rows -> deduped triples: the staged path's equality-by-value dedup,
+# under the name the fused-extract callers import
+fused_triples = dedupe_triples

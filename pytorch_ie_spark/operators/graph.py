@@ -45,6 +45,12 @@ def graph_degree_stats(edges: DataFrame) -> DataFrame:
     )
 
 
+def _empty_ranks(nodes: DataFrame) -> DataFrame:
+    """The (node, pagerank double) result of a graph without edges: typed
+    and empty, instead of dividing by a zero node count."""
+    return nodes.select("node", F.lit(0.0).alias("pagerank"))
+
+
 def pagerank_converged(
     edges: DataFrame,
     damping: float = 0.85,
@@ -70,6 +76,8 @@ def pagerank_converged(
         .localCheckpoint(eager=False)
     )
     n_nodes = nodes.count()
+    if n_nodes == 0:
+        return _empty_ranks(nodes), 0
     out_deg = e.groupBy("src").agg(
         F.count(F.lit(1)).alias("out_deg")
     ).localCheckpoint(eager=False)
@@ -148,6 +156,8 @@ def pagerank(
     )
     if n_nodes is None:
         n_nodes = nodes.count()
+    if n_nodes == 0:
+        return _empty_ranks(nodes)
     out_deg = e.groupBy("src").agg(
         F.count(F.lit(1)).alias("out_deg")
     ).localCheckpoint(eager=False)

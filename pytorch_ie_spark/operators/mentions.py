@@ -21,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.span import bio_tags_to_spans
+from ..functions.span import label_slice_spans
 from ..functions.tokenize import tokenize_with_offsets
 from ..functions.window import enumerate_windows
 from ..functions.hashing import mention_id
@@ -152,11 +152,7 @@ def infer_mentions(
                 pdf["content_sha256"],
                 tags_batch,
             ):
-                # restrict decoding to the label slice: mask context tokens
-                masked = [
-                    tag if ls <= i < le else "O" for i, tag in enumerate(tags)
-                ]
-                for label, (s_tok, e_tok) in bio_tags_to_spans(masked):
+                for label, (s_tok, e_tok) in label_slice_spans(tags, ls, le):
                     cs, ce = int(starts[s_tok]), int(ends[e_tok])
                     surface = " ".join(tokens[s_tok : e_tok + 1])
                     rows.append(

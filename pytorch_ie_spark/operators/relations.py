@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .candidates import ordered_pair_indices
 from .models import resolve_model
 
 RELATIONS_SCHEMA = (
@@ -93,100 +94,6 @@ def classify_relations(
     return relations
 
 
-def extract_relations_cogrouped(
-    documents: DataFrame,
-    mentions: DataFrame,
-    model_name: str = "rule_re",
-    model_config: dict | None = None,
-    max_distance: int | None = 200,
-    none_label: str = "no_relation",
-    keep_none: bool = False,
-) -> DataFrame:
-    """Fused candidate-generation + classification via cogroup-applyInPandas.
-
-    One shuffle per input (both keyed by doc_id), no per-candidate text
-    duplication, no collect_list — this is the reference's 'candidate pairs
-    generated inside the taskmodule' shape (SURVEY.md §2.3) and the scale
-    path the pipeline uses. The modular candidate_pairs/classify_relations
-    path remains for oracle-checked queries.
-    """
-    doc_side = documents.select("doc_id", "text", "content_sha256")
-    m_side = mentions.select(
-        "doc_id", "mention_id", "start", "end", "label", "surface"
-    )
-
-    def process(key, docs_pdf: pd.DataFrame, ments_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = [
-            "doc_id",
-            "head_mention_id",
-            "tail_mention_id",
-            "label",
-            "score",
-            "source",
-            "content_sha256",
-        ]
-        if len(docs_pdf) == 0 or len(ments_pdf) < 2:
-            return pd.DataFrame(columns=cols)
-        model = resolve_model(model_name, model_config)
-        text = docs_pdf["text"].iloc[0]
-        sha = docs_pdf["content_sha256"].iloc[0]
-        doc_id = docs_pdf["doc_id"].iloc[0]
-        ms = sorted(
-            zip(
-                ments_pdf["start"].astype(int),
-                ments_pdf["end"].astype(int),
-                ments_pdf["label"],
-                ments_pdf["mention_id"],
-            )
-        )
-        mlist = [(s, e, lab) for s, e, lab, _ in ms]
-        heads, tails, hl, tl, hid, tid = [], [], [], [], [], []
-        for hs, he, hlab, hmid in ms:
-            for ts, te, tlab, tmid in ms:
-                if hmid == tmid:
-                    continue
-                if max_distance is not None:
-                    gap = max(0, max(hs, ts) - min(he, te))
-                    if gap > max_distance:
-                        continue
-                heads.append((hs, he))
-                tails.append((ts, te))
-                hl.append(hlab)
-                tl.append(tlab)
-                hid.append(hmid)
-                tid.append(tmid)
-        if not heads:
-            return pd.DataFrame(columns=cols)
-        preds = model.predict_pairs(
-            [text] * len(heads),
-            [mlist] * len(heads),
-            heads,
-            tails,
-            head_labels=hl,
-            tail_labels=tl,
-        )
-        out = pd.DataFrame(
-            {
-                "doc_id": doc_id,
-                "head_mention_id": hid,
-                "tail_mention_id": tid,
-                "label": [p[0] for p in preds],
-                "score": [float(p[1]) for p in preds],
-                "source": "pred",
-                "content_sha256": sha,
-            }
-        )
-        if not keep_none:
-            out = out[out["label"] != none_label]
-        return out
-
-    return (
-        doc_side.groupby("doc_id")
-        .cogroup(m_side.groupby("doc_id"))
-        .applyInPandas(process, schema=RELATIONS_SCHEMA)
-    )
-
-
 def extract_relations_batched(
     documents: DataFrame,
     mentions: DataFrame,
@@ -198,16 +105,17 @@ def extract_relations_batched(
     max_window: int | None = None,
 ) -> DataFrame:
     """Fused candidate-generation + classification, ONE Python invocation per
-    Arrow batch (not per document).
+    Arrow batch (not per document) — the pipeline's relation stage.
 
-    The cogroup-applyInPandas variant above invokes the Python worker and
-    allocates a pandas frame per doc_id group — per-key overhead that the
-    extract.py docstring warns against and that dominates at 10^12 docs.
-    Here mentions are pre-aggregated per doc (sort_array+collect_list: one
-    shuffle, bounded arrays), joined with the doc text, and the classifier
-    runs once per Arrow batch spanning MANY documents: candidate pairs are
-    built row-by-row in local Python lists (cheap, no copies — the text is
-    shared by reference) and predicted in a single vectorized call.
+    A per-doc_id cogroup would invoke the Python worker and allocate a
+    pandas frame per group, per-key overhead that dominates at 10^12 docs.
+    Instead mentions are pre-aggregated per doc (sort_array+collect_list:
+    one shuffle, bounded arrays), joined with the doc text, and the
+    classifier runs once per Arrow batch spanning MANY documents:
+    candidate pairs follow the `candidate_pairs` rule
+    (candidates.ordered_pair_indices), are gathered in local Python lists
+    (cheap, no copies — the text is shared by reference) and predicted in
+    a single vectorized call.
 
     When `max_window` is set, each candidate's context is restricted to a
     window of that many chars centered on the (head..tail) required slice
@@ -252,44 +160,42 @@ def extract_relations_batched(
                 if len(ms) < 2:
                     continue
                 mlist = [(s, e, lab) for s, e, lab, _ in ms]
-                for hs, he, hlab, hmid in ms:
-                    for ts, te, tlab, tmid in ms:
-                        if hmid == tmid:
+                h_idx, t_idx = ordered_pair_indices(
+                    [m[0] for m in ms], [m[1] for m in ms], max_distance
+                )
+                for hi, ti in zip(h_idx, t_idx):
+                    hs, he, hlab, hmid = ms[hi]
+                    ts, te, tlab, tmid = ms[ti]
+                    if max_window is not None:
+                        win = window_around_slice(
+                            (min(hs, ts), max(he, te)),
+                            max_window,
+                            len(text),
+                        )
+                        if win is None:  # skipped_too_long
                             continue
-                        if max_distance is not None:
-                            gap = max(0, max(hs, ts) - min(he, te))
-                            if gap > max_distance:
-                                continue
-                        if max_window is not None:
-                            win = window_around_slice(
-                                (min(hs, ts), max(he, te)),
-                                max_window,
-                                len(text),
-                            )
-                            if win is None:  # skipped_too_long
-                                continue
-                            ws, we = win
-                            texts.append(text[ws:we])
-                            mlists.append(
-                                [
-                                    (s - ws, e - ws, lab)
-                                    for s, e, lab in mlist
-                                    if s >= ws and e <= we
-                                ]
-                            )
-                            heads.append((hs - ws, he - ws))
-                            tails.append((ts - ws, te - ws))
-                        else:
-                            texts.append(text)
-                            mlists.append(mlist)
-                            heads.append((hs, he))
-                            tails.append((ts, te))
-                        hl.append(hlab)
-                        tl.append(tlab)
-                        hid.append(hmid)
-                        tid.append(tmid)
-                        dids.append(doc_id)
-                        shas.append(sha)
+                        ws, we = win
+                        texts.append(text[ws:we])
+                        mlists.append(
+                            [
+                                (s - ws, e - ws, lab)
+                                for s, e, lab in mlist
+                                if s >= ws and e <= we
+                            ]
+                        )
+                        heads.append((hs - ws, he - ws))
+                        tails.append((ts - ws, te - ws))
+                    else:
+                        texts.append(text)
+                        mlists.append(mlist)
+                        heads.append((hs, he))
+                        tails.append((ts, te))
+                    hl.append(hlab)
+                    tl.append(tlab)
+                    hid.append(hmid)
+                    tid.append(tmid)
+                    dids.append(doc_id)
+                    shas.append(sha)
             if not heads:
                 continue
             preds = model.predict_pairs(

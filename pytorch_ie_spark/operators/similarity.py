@@ -1,13 +1,13 @@
 """Similarity search over an embedding column (array<float>).
 
-Three paths:
+Three building blocks:
   - brute-force cosine top-k: broadcast the (small) query set against all
     vectors; dot/norms via higher-order functions (zip_with + aggregate),
     fully JVM-side — the exact baseline,
-  - LSH-bucketed ANN: deterministic random-hyperplane signatures (weights
-    ±1 derived from md5(plane|dim), engine-portable) bucket the vectors;
-    candidates are same-bucket only — a 100 TB scale path (bucket join
-    instead of cross join),
+  - LSH bucketing: deterministic random-hyperplane signatures (weights
+    ±1 derived from md5(plane|dim), engine-portable) bucket the vectors
+    so the registry's ANN queries score same-bucket candidates only — a
+    100 TB scale path (bucket join instead of cross join),
   - IVF ANN: vectors assigned to their nearest centroid (inverted lists);
     a query probes only its `nprobe` nearest lists. At cluster scale the
     lists are the partitioning key, so a probe is partition pruning — the
@@ -84,72 +84,6 @@ def brute_force_topk(
     )
 
 
-def brute_force_topk_two_phase(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """brute_force_topk for the few-queries x huge-corpus regime.
-
-    The windowed variant shuffles EVERY candidate of a query into one
-    partition before ranking — fine when many queries spread the load, a
-    single-partition bottleneck when a handful of queries scan 10^9
-    vectors. Here each input partition first reduces to its LOCAL top-k
-    per query (mapInPandas, no shuffle), so the global rank only sees
-    k x num_partitions rows per query. Identical results (asserted in
-    tests): top-k of a union is the top-k of per-part top-ks."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    base = embeddings.select(
-        F.col(id_col).cast("long").alias("nid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-    )
-    queries = base.where(F.col("nid").isin([int(q) for q in query_ids])).select(
-        F.col("nid").alias("query_id"), F.col("vec").alias("qvec")
-    )
-    joined = base.join(F.broadcast(queries), F.col("nid") != F.col("query_id"))
-    cos = (
-        _dot(F.col("qvec"), F.col("vec"))
-        / (_norm(F.col("qvec")) * _norm(F.col("vec")))
-    ).alias("cos")
-    scored = joined.select("query_id", F.col("nid").alias("neighbor_id"), cos)
-
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # fold a RUNNING per-query top-k across Arrow batches: resident
-        # memory is one batch + k x num_queries rows, never the whole
-        # partition (which is unbounded at 10^9 vectors/partition)
-        best: pd.DataFrame | None = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cand = (
-                pdf
-                if best is None
-                else pd.concat([best, pdf], ignore_index=True)
-            )
-            cand = cand.sort_values(
-                ["query_id", "cos", "neighbor_id"],
-                ascending=[True, False, True],
-            )
-            best = cand.groupby("query_id", sort=False).head(k)
-        if best is not None:
-            yield best
-
-    reduced = scored.mapInPandas(
-        local_topk, schema="query_id long, neighbor_id long, cos double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        reduced.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id")
-    )
-
-
 def hyperplane_weight(p: int, i: int) -> float:
     """Deterministic ±1 weight for (plane p, dim i): +1 iff the first hex
     char of md5('p|i') >= '8'. Engine-portable (oracles recompute the same
@@ -203,36 +137,6 @@ def hyperplane_signature_cols(vec_col, num_planes: int = 8, dim: int | None = No
     return [plane_bit(p) for p in range(num_planes)]
 
 
-def lsh_bucketed_ann(
-    embeddings: DataFrame,
-    k: int = 5,
-    num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate neighbors: only same-signature pairs are scored.
-    Returns (query_id, rank, neighbor_id, bucket) per bucketed query.
-    Pass `dim` so the hyperplane weights become plan literals."""
-    base = embeddings.select(
-        F.col(id_col).cast("long").alias("nid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-    )
-    bits = hyperplane_signature_cols(F.col("vec"), num_planes, dim=dim)
-    sig = base.select("nid", "vec", F.concat_ws("", *bits).alias("bucket"))
-    a = sig.select("bucket", F.col("nid").alias("query_id"), F.col("vec").alias("qvec"))
-    b = sig.select(F.col("bucket").alias("bucket2"), F.col("nid").alias("neighbor_id"), "vec")
-    pairs = a.join(b, (a.bucket == b.bucket2) & (F.col("query_id") != F.col("neighbor_id")))
-    cos = (_dot(F.col("qvec"), F.col("vec")) / (_norm(F.col("qvec")) * _norm(F.col("vec")))).alias("cos")
-    scored = pairs.select("bucket", "query_id", "neighbor_id", cos)
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "bucket")
-    )
-
-
 def _cos_to_literal(vec_col, cvec: list[float], vec_norm=None):
     """Cosine of a vector column against a centroid embedded as a literal
     array — same fold order as the in-table cosine so engines agree.
@@ -252,35 +156,6 @@ def _cos_to_literal(vec_col, cvec: list[float], vec_norm=None):
     cnorm = F.lit(math.sqrt(acc))
     vn = vec_norm if vec_norm is not None else _norm(vec_col)
     return _dot(vec_col, arr) / (vn * cnorm)
-
-
-def ivf_assign_broadcast(
-    base: DataFrame, centroids: DataFrame
-) -> DataFrame:
-    """Centroid assignment via a broadcast join — the shape that survives
-    real centroid counts (a 4k-centroid index would bloat literal plans;
-    a broadcast DF join stays O(1) plan size). base: (nid, vec);
-    centroids: (cid, cvec). Returns (nid, vec, centroid_id) with
-    argmax-cosine assignment, ties to the lowest cid, via one map-side
-    max_by aggregation (no window shuffle)."""
-    joined = base.join(F.broadcast(centroids))
-    cos = _dot(F.col("vec"), F.col("cvec")) / (
-        _norm(F.col("vec")) * _norm(F.col("cvec"))
-    )
-    scored = joined.select(
-        "nid",
-        "vec",
-        F.struct(
-            cos.alias("cos"), (-F.col("cid")).cast("long").alias("negcid")
-        ).alias("sc"),
-    )
-    return (
-        scored.groupBy("nid")
-        .agg(
-            F.first("vec").alias("vec"),
-            (-F.max("sc")["negcid"]).alias("centroid_id"),
-        )
-    )
 
 
 def ivf_topk(

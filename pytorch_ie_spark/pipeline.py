@@ -1,12 +1,14 @@
 """End-to-end KG-construction pipeline orchestrator.
 
-    source_files -> documents -> mentions -> candidates -> relations
+    source_files -> documents -> mentions -> relations
                  -> canonicalization -> triples (+ lineage per stage)
 
 Mirrors PyTorchIEPipeline.__call__ (reference: src/pytorch_ie/pipeline.py:309-431)
-with Spark-stage boundaries; every stage is checkpoint-resumable via
-plans/lineage.run_stage when a ckpt_dir is given, and skew-managed via
-plans/skew helpers.
+with Spark-stage boundaries. The relation stage is one fused
+candidates+classify pass (operators/relations.extract_relations_batched).
+Every stage is checkpoint-resumable via plans/lineage.run_stage when a
+ckpt_dir is given; documents are size-bucketed (plans/skew.size_bucketed)
+so the model-UDF partitions stay even.
 """
 
 from __future__ import annotations
@@ -16,17 +18,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.candidates import candidate_pairs
 from .operators.canonicalize import canonicalize_mentions
 from .operators.mentions import detect_mentions
-from .operators.relations import (
-    classify_relations,
-    extract_relations_batched,
-    extract_relations_cogrouped,
-)
+from .operators.relations import extract_relations_batched
 from .operators.triples import dedupe_triples, relations_to_triples
 from .plans.lineage import run_stage
-from .plans.skew import salted_repartition, size_bucketed
+from .plans.skew import size_bucketed
 from .sources.readers import documents_from_source_files
 
 
@@ -59,15 +56,8 @@ class KgPipelineConfig:
     linker_kb: list | None = None
     linker_beam_size: int = 1
     none_label: str = "no_relation"
-    # relation stage plan:
-    #   'batched'   (default) — fused candidates+classify, ONE Python call
-    #               per Arrow batch spanning many docs (the 10^12-doc shape),
-    #   'cogrouped' — fused but one Python call per doc_id group (per-key
-    #               overhead; kept for comparison),
-    #   'modular'   — explicit candidate_pairs self-join + classify_relations.
-    relation_stage: str = "batched"
-    # skew handling
-    salt_partitions: int | None = None
+    # long-file skew: documents are spread evenly and sorted by
+    # length // size_bucket_width inside each partition
     size_bucket_width: int = 1024
 
 
@@ -94,13 +84,13 @@ def run_kg_pipeline(
         return build()
 
     def build_documents() -> DataFrame:
-        docs = documents_from_source_files(source_files)
-        # mega-repo skew: spread by salted content hash; long-file skew:
-        # size-bucket so UDF partitions are even
-        if cfg.salt_partitions:
-            docs = salted_repartition(docs, "doc_id", num_partitions=cfg.salt_partitions)
-        docs = size_bucketed(docs, F.length("text"), cfg.size_bucket_width)
-        return docs
+        # one hash shuffle over all columns spreads hot repos and long
+        # files alike; the local sort keeps Arrow batches length-homogeneous
+        return size_bucketed(
+            documents_from_source_files(source_files),
+            F.length("text"),
+            cfg.size_bucket_width,
+        )
 
     def once(df: DataFrame) -> DataFrame:
         # without a ckpt_dir nothing materializes stages, and downstream
@@ -124,33 +114,14 @@ def run_kg_pipeline(
     )
 
     def build_relations() -> DataFrame:
-        if cfg.relation_stage == "batched":
-            return extract_relations_batched(
-                documents,
-                mentions,
-                model_name=cfg.re_model,
-                model_config=cfg.re_model_config,
-                max_distance=cfg.max_candidate_distance,
-                none_label=cfg.none_label,
-                max_window=cfg.re_max_window,
-            )
-        if cfg.relation_stage == "cogrouped":
-            return extract_relations_cogrouped(
-                documents,
-                mentions,
-                model_name=cfg.re_model,
-                model_config=cfg.re_model_config,
-                max_distance=cfg.max_candidate_distance,
-                none_label=cfg.none_label,
-            )
-        cands = candidate_pairs(mentions, max_distance=cfg.max_candidate_distance)
-        return classify_relations(
-            cands,
+        return extract_relations_batched(
             documents,
             mentions,
             model_name=cfg.re_model,
             model_config=cfg.re_model_config,
+            max_distance=cfg.max_candidate_distance,
             none_label=cfg.none_label,
+            max_window=cfg.re_max_window,
         )
 
     relations = once(stage("relations", build_relations))

@@ -86,10 +86,6 @@ def _legacy_triple_dirs(spark: SparkSession, out_dir: str) -> list[str]:
     return _glob_dirs(spark, os.path.join(_triples_path(out_dir), "pred=*"))
 
 
-def _modern_triple_dirs(spark: SparkSession, out_dir: str) -> list[str]:
-    return _glob_dirs(spark, os.path.join(_triples_path(out_dir), "run_id=*"))
-
-
 def _marker_table(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Markers normalized to (unit_key, run_id); legacy marker files (no
     run_id column) read as run_id='legacy' via parquet schema merge."""

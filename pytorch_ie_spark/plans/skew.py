@@ -1,12 +1,16 @@
-"""Skew handling: salted repartitioning + size-bucketed coalescing.
+"""Skew handling: size-bucketed hash partitioning + under-partition fan-out.
 
 The north_rule's skew sources at 10^12-file scale:
   - mega-repos: a single `repo` holding a large share of files makes any
-    repo-keyed shuffle partition hot -> salt the key,
+    repo-keyed shuffle partition hot,
   - long files: a few documents dominating UDF wall time inside otherwise
-    balanced partitions -> bucket by content length and range-partition so
-    long docs spread across executors (and Arrow batches stay homogeneous,
-    which also bounds padding waste in the model UDF).
+    balanced partitions.
+
+`size_bucketed` answers both with one shuffle: a hash over every column
+(no single hot key survives it) spreads rows evenly, and a local sort by
+length bucket keeps Arrow batches length-homogeneous, which bounds padding
+waste in the model UDF. `ensure_parallelism` fans out inputs that scan as
+too few partitions.
 
 AQE's skewJoin only rebalances *joins*; UDF-stage skew needs this explicit
 treatment (SURVEY.md §4).
@@ -16,23 +20,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_repartition(
-    df: DataFrame, key_col: str, num_salts: int = 16, num_partitions: int | None = None
-) -> DataFrame:
-    """Repartition on (key, deterministic salt) so one hot key spreads over
-    `num_salts` partitions. Salt derives from a row-content hash, not rand(),
-    so the layout is reproducible (checkpoint-resume safe)."""
-    salted = df.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(num_salts)),
-    )
-    if num_partitions:
-        out = salted.repartition(num_partitions, F.col(key_col), F.col("_salt"))
-    else:
-        out = salted.repartition(F.col(key_col), F.col("_salt"))
-    return out.drop("_salt")
 
 
 def size_bucketed(
@@ -78,13 +65,3 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     return df
 
 
-def skew_report(df: DataFrame, key_col: str, top_n: int = 10) -> DataFrame:
-    """Diagnostic: heaviest keys with their share of total rows."""
-    total = df.count()
-    return (
-        df.groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .withColumn("share", F.round(F.col("rows") / F.lit(total), 6))
-        .orderBy(F.col("rows").desc())
-        .limit(top_n)
-    )

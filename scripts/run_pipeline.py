@@ -7,7 +7,7 @@ Cluster usage (north_rule: spark-submit --py-files at scale):
         scripts/run_pipeline.py \
         --input  <dir or Iceberg table of (repo,path,commit,lang,content)> \
         --output <triples dir> --ckpt <checkpoint dir> \
-        [--input-format parquet|documents] [--salt-partitions N]
+        [--input-format parquet|documents]
 
 Local smoke (sandbox):
 
@@ -42,7 +42,6 @@ def main() -> None:
     ap.add_argument("--ner-model", default="gazetteer_ner")
     ap.add_argument("--re-model", default="cooccurrence_re")
     ap.add_argument("--max-distance", type=int, default=40)
-    ap.add_argument("--salt-partitions", type=int, default=None)
     ap.add_argument("--no-canonicalize", action="store_true")
     ap.add_argument(
         "--linker",
@@ -80,7 +79,6 @@ def main() -> None:
         re_model=args.re_model,
         max_candidate_distance=args.max_distance,
         canonicalize=not args.no_canonicalize,
-        salt_partitions=args.salt_partitions,
         linker=args.linker,
     )
     t0 = time.monotonic()

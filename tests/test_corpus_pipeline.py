@@ -101,25 +101,10 @@ def test_content_sha_invariant(spark, pipeline_outputs):
             assert row["content_sha256"] == doc_sha[row["doc_id"]]
 
 
-def test_fused_equals_modular_relations(spark, pipeline_outputs):
-    """The cogroup-fused relation stage must produce exactly the relations of
-    the modular candidate_pairs -> classify_relations path."""
-    from pytorch_ie_spark.operators.relations import extract_relations_cogrouped
-
-    docs, mentions, relations = pipeline_outputs
-    fused = extract_relations_cogrouped(
-        docs, mentions, model_name="rule_re", max_distance=200
-    )
-    key = ["doc_id", "head_mention_id", "tail_mention_id", "label"]
-    a = sorted(map(tuple, fused.select(*key).collect()))
-    b = sorted(map(tuple, relations.select(*key).collect()))
-    assert a == b
-
-
 def test_batched_equals_modular_relations(spark, pipeline_outputs):
     """The batched (one-Python-call-per-Arrow-batch) relation stage — the
-    pipeline default — must produce exactly the relations of the modular
-    path."""
+    pipeline's only relation path — must produce exactly the relations of
+    the modular candidate_pairs -> classify_relations reference."""
     from pytorch_ie_spark.operators.relations import extract_relations_batched
 
     docs, mentions, relations = pipeline_outputs

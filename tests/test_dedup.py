@@ -49,18 +49,35 @@ def test_minhash_signature_matches_python(spark):
     df = _docs(spark, [text])
     from pytorch_ie_spark.operators.canonicalize import (
         char_shingles_col,
-        minhash_signature_cols,
+        with_minhash_signature,
     )
     from pytorch_ie_spark.operators.dedup import normalize_text
 
-    row = (
-        df.select(char_shingles_col(normalize_text(F.col("text")), 5).alias("sh"))
-        .select(*minhash_signature_cols(F.col("sh"), 4))
-        .collect()[0]
+    sh = df.select(
+        char_shingles_col(normalize_text(F.col("text")), 5).alias("sh")
     )
+    row = with_minhash_signature(sh, "sh", 4).collect()[0]
     expected = minhash_signature(char_shingles(text, 5), 4)
     assert [row[f"mh{i}"] for i in range(4)] == expected
 
+
+
+def test_jaccard_threshold_filters_the_raw_ratio(spark):
+    """The verify step compares the RAW intersection/union ratio with the
+    threshold (like the SQL oracles); the 6-decimal rounding is only the
+    output column. These two 9-char docs share 4 of 6 distinct 5-shingles
+    (Jaccard exactly 2/3) and collide in a MinHash band, so a threshold of
+    0.6666668 must reject them even though round(2/3, 6) = 0.666667."""
+    from pytorch_ie_spark.operators.dedup import cross_corpus_near_dups
+
+    a, b = "abcdefghi", "bcdefghij"
+    df = _docs(spark, [a, b])
+    new, index = df.where(F.col("doc_id") == 0), df.where(F.col("doc_id") == 1)
+    for t, expected in ((0.6666666, [(0, 1, 0.666667)]), (0.6666668, [])):
+        pairs = minhash_lsh_pairs(df, "doc_id", "text", jaccard_threshold=t)
+        assert [tuple(r) for r in pairs.collect()] == expected
+        cross = cross_corpus_near_dups(new, index, jaccard_threshold=t)
+        assert [tuple(r) for r in cross.collect()] == expected
 
 def test_simhash_matches_python(spark):
     text = "alpha beta gamma delta"

@@ -76,3 +76,17 @@ def test_pagerank_converged_reaches_fixed_point(spark):
     # non-convergence must raise, not return silently
     with pytest.raises(RuntimeError, match="converge"):
         pagerank_converged(_edges(spark), tol=1e-15, max_iter=2)
+
+
+def test_pagerank_empty_graph_is_typed_and_empty(spark):
+    """No edges means no nodes: both variants return a typed empty frame
+    instead of dividing by a zero node count."""
+    from pytorch_ie_spark.operators.graph import pagerank_converged
+
+    edges = spark.createDataFrame([], "src string, dst string")
+    fixed = pagerank(edges)
+    converged, sweeps = pagerank_converged(edges)
+    for pr in (fixed, converged):
+        assert pr.schema.simpleString() == "struct<node:string,pagerank:double>"
+        assert pr.collect() == []
+    assert sweeps == 0

@@ -11,7 +11,7 @@ from pytorch_ie_spark.plans.lineage import (
     run_stage,
     stage_is_complete,
 )
-from pytorch_ie_spark.plans.skew import salted_repartition, size_bucketed
+from pytorch_ie_spark.plans.skew import size_bucketed
 
 
 def test_run_stage_writes_and_resumes(spark, tmp_path):
@@ -66,20 +66,6 @@ def test_resume_pending_partitions_anti_join(spark):
     done = spark.createDataFrame([(0,), (1,), (2,)], "part_key long")
     pending = resume_pending_partitions(inputs, done, "part_key")
     assert pending.count() == 7
-
-
-def test_salted_repartition_spreads_hot_key(spark):
-    df = spark.createDataFrame([("hot", i) for i in range(1000)], "k string, v int")
-    out = salted_repartition(df, "k", num_salts=8, num_partitions=8)
-    sizes = (
-        out.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    # a single hot key must land on >1 partition
-    assert len(sizes) > 1
-    assert out.count() == 1000
 
 
 def test_size_bucketed_partitions_by_length(spark):

@@ -4,8 +4,10 @@ the reference's round-trip test family (SURVEY.md §5 layer 3)."""
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from pytorch_ie_spark.operators.candidates import ordered_pair_indices
 from pytorch_ie_spark.functions.span import (
     bio_tags_to_spans,
+    span_distance,
     spans_to_bio_tags,
 )
 from pytorch_ie_spark.functions.tokenize import (
@@ -217,3 +219,36 @@ def test_softmax_argmax_properties(logits):
     assert idx == logits.index(max(logits))  # first max index
     assert 0.0 < prob <= 1.0
     assert prob >= 1.0 / len(logits) - 1e-12  # argmax prob is at least uniform
+
+
+@st.composite
+def span_lists(draw):
+    """0..8 spans, freely overlapping, nested or identical."""
+    n = draw(st.integers(min_value=0, max_value=8))
+    spans = []
+    for _ in range(n):
+        start = draw(st.integers(min_value=0, max_value=60))
+        spans.append((start, start + draw(st.integers(min_value=0, max_value=15))))
+    return spans
+
+
+@given(
+    span_lists(),
+    st.one_of(st.none(), st.integers(min_value=0, max_value=40)),
+)
+@settings(max_examples=300, deadline=None)
+def test_ordered_pair_indices_match_double_loop(spans, max_distance):
+    """The fused extractors' numpy pair rule equals the reference double
+    loop: every ordered (head, tail) with head != tail whose inner
+    span_distance is within max_distance, head-major."""
+    expected = [
+        (h, t)
+        for h, head in enumerate(spans)
+        for t, tail in enumerate(spans)
+        if h != t
+        and (max_distance is None or span_distance(head, tail) <= max_distance)
+    ]
+    h_idx, t_idx = ordered_pair_indices(
+        [s for s, _ in spans], [e for _, e in spans], max_distance
+    )
+    assert list(zip(h_idx.tolist(), t_idx.tolist())) == expected

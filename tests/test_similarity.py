@@ -1,9 +1,9 @@
-"""Similarity search: brute-force cosine top-k + LSH bucketing."""
+"""Similarity search: brute-force cosine top-k, IVF probing, and
+embedding near-duplicates."""
 
 from pytorch_ie_spark.operators.similarity import (
     brute_force_topk,
     embedding_near_duplicates,
-    lsh_bucketed_ann,
 )
 
 
@@ -30,17 +30,6 @@ def test_topk_excludes_self_and_limits(spark):
     out = brute_force_topk(_emb(spark, vs), [0], k=2).collect()
     ids = {r["neighbor_id"] for r in out}
     assert 0 not in ids and len(out) == 2
-
-
-def test_lsh_bucket_recall_on_identical_vectors(spark):
-    vs = [[1.0, 2.0, 3.0, 4.0]] * 3 + [[-1.0, -2.0, -3.0, -4.0]] * 2
-    out = lsh_bucketed_ann(_emb(spark, vs), k=5, num_planes=4).collect()
-    # identical vectors share a bucket -> each of the 3 finds the other 2
-    neigh = {}
-    for r in out:
-        neigh.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    assert neigh[0] == {1, 2}
-    assert neigh[3] == {4}
 
 
 def test_embedding_near_duplicates_threshold(spark):
@@ -73,58 +62,3 @@ def test_ivf_assigns_and_probes(spark):
     out2 = ivf_topk(_emb(spark, vs), [0], num_centroids=2, nprobe=2, k=5).collect()
     by_rank = [r["neighbor_id"] for r in sorted(out2, key=lambda r: r["rank"])]
     assert by_rank == [2, 3, 4, 1]
-
-
-def test_ivf_broadcast_assignment_matches_literal(spark):
-    """The broadcast-DF centroid assignment (the real-centroid-count shape)
-    must agree with the literal-embedding argmax used by ivf_topk."""
-    from pyspark.sql import functions as F
-
-    from pytorch_ie_spark.operators.similarity import (
-        _cos_to_literal,
-        ivf_assign_broadcast,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    base = emb.select(
-        F.col("vec_id").cast("long").alias("nid"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("vec"),
-    )
-    cents = sorted(
-        (r["nid"], r["vec"]) for r in base.where(F.col("nid") < 8).collect()
-    )
-    # literal path (ivf_topk's internal assignment)
-    scored = F.array(
-        *[
-            F.struct(
-                _cos_to_literal(F.col("vec"), cv).alias("cos"),
-                F.lit(-cid).cast("long").alias("negcid"),
-            )
-            for cid, cv in cents
-        ]
-    )
-    lit = base.withColumn("centroid_id", -F.array_max(scored)["negcid"]).select(
-        "nid", "centroid_id"
-    )
-    cdf = spark.createDataFrame(
-        [(cid, cv) for cid, cv in cents], "cid long, cvec array<double>"
-    )
-    bc = ivf_assign_broadcast(base, cdf).select("nid", "centroid_id")
-    a = sorted(map(tuple, lit.collect()))
-    b = sorted(map(tuple, bc.collect()))
-    assert a == b
-
-
-def test_two_phase_topk_equals_windowed(spark):
-    """Per-partition local top-k + global rank must equal the single-window
-    ranking on the sf0.01 embeddings."""
-    from pytorch_ie_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_two_phase,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").repartition(8)
-    qids = [0, 3, 11]
-    a = sorted(map(tuple, brute_force_topk(emb, qids, k=5).collect()))
-    b = sorted(map(tuple, brute_force_topk_two_phase(emb, qids, k=5).collect()))
-    assert a == b
