@@ -10,10 +10,12 @@ the merge+dedup in utils/document.py:76-144):
      (portable universal-hash min-hashing over one md5 base hash per
      shingle, functions/hashing.py) -> candidate equivalence edges within
      LSH buckets,
-  4. verify edges by exact Jaccard on shingle sets (array_intersect),
-  5. connected components via iterative DataFrame min-label propagation
-     (hash-to-min style; localCheckpoint per round to cut lineage),
-  6. canonical entity_id = lexicographic min normalized form per component.
+  4. verify edges by exact Jaccard on shingle sets (array_intersect) inside
+     the band self-join,
+  5. connected components (driver union-find when small, large-star /
+     small-star rounds otherwise), labeled by their minimum node,
+  6. canonical entity_id = 'sf:' + that label, the lexicographic min
+     normalized form per component (none for an empty normalized form).
 
 Scale notes: every step is a shuffle on a bounded key (band key / node id);
 bucket sizes are capped (`max_bucket`) so a degenerate band (stopword-ish
@@ -54,53 +56,36 @@ def char_shingles_col(col, k: int = 3):
     )
 
 
-def _base_hash_col(shingle_col):
-    """32-bit base hash per shingle: int(md5(shingle)[:8], 16). ONE digest per
-    shingle serves every signature component (functions/hashing.py family)."""
-    return F.transform(
-        shingle_col,
-        lambda x: F.conv(F.substring(F.md5(x), 1, 8), 16, 10).cast("long"),
+def _minhash_fold_sql(shingle_col: str, num_hashes: int) -> str:
+    """All components in ONE fold, written as one SQL expression (a single
+    py4j call to build, however many components): aggregate over the
+    32-bit base hashes int(md5(shingle)[:8], 16) — one digest per shingle
+    serves every component (functions/hashing.py family) — with the bound
+    element reused by every affine term. Integer math only inside the
+    fold."""
+    init = ", ".join(f"'mh{i}', {MINHASH_PRIME}" for i in range(num_hashes))
+    step = ", ".join(
+        f"'mh{i}', least(acc.mh{i}, (h * {a} + {b}) % {MINHASH_PRIME})"
+        for i, (a, b) in enumerate(MINHASH_AB[:num_hashes])
     )
-
-
-def _minhash_struct_col(shingle_col, num_hashes: int):
-    """All components in ONE fold: aggregate over the base-hash array (the
-    aggregate's input expression — the md5 pass — is evaluated once per row),
-    with the bound element reused by every affine term. Integer math only
-    inside the fold."""
-    init = F.struct(
-        *[
-            F.lit(MINHASH_PRIME).cast("long").alias(f"mh{i}")
-            for i in range(num_hashes)
-        ]
+    return (
+        f"aggregate(transform(`{shingle_col}`, "
+        "x -> cast(conv(substring(md5(x), 1, 8), 16, 10) as bigint)), "
+        f"named_struct({init}), (acc, h) -> named_struct({step}))"
     )
-
-    def merge(acc, h):
-        fields = []
-        for i in range(num_hashes):
-            a, b = MINHASH_AB[i]
-            fields.append(
-                F.least(
-                    acc[f"mh{i}"],
-                    (h * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME),
-                ).alias(f"mh{i}")
-            )
-        return F.struct(*fields)
-
-    return F.aggregate(_base_hash_col(shingle_col), init, merge)
 
 
 def with_minhash_signature(df, shingle_col: str, num_hashes: int = 16):
     """Adds mh0..mh{n-1} long columns in a single pass over the shingles.
 
-    The struct is surfaced through F.inline(F.array(...)) — a generator is
+    The struct is surfaced through inline(array(...)) — a generator is
     evaluated once per row, whereas selecting N getFields of a struct
     expression lets CollapseProject duplicate the whole aggregate (and its
     md5 pass) into every component column. No caching or checkpoint barrier
     is needed, so nothing large stays pinned in executor memory."""
     return df.select(
         *df.columns,
-        F.inline(F.array(_minhash_struct_col(F.col(shingle_col), num_hashes))),
+        F.expr(f"inline(array({_minhash_fold_sql(shingle_col, num_hashes)}))"),
     )
 
 
@@ -124,9 +109,9 @@ def _surface_band_stack(
     shingle_k: int,
     num_hashes: int,
     band_size: int,
-) -> tuple[DataFrame, DataFrame]:
-    """(base, stacked): distinct non-empty surfaces with shingles, plus the
-    exploded (node, band_key) MinHash band stack they hash into."""
+) -> DataFrame:
+    """(node, shingles, band_key): the MinHash band stack of the distinct
+    non-empty surfaces, one row per (surface, band)."""
     base = (
         surfaces.select(F.col(surface_col).alias("node"))
         .where(F.length("node") > 0)
@@ -140,22 +125,14 @@ def _surface_band_stack(
             F.col(f"mh{i}").cast("string")
             for i in range(b, min(b + band_size, num_hashes))
         ]
-        bands.append(
-            F.concat_ws("|", F.lit(str(b)), *cols).alias(f"band{b // band_size}")
-        )
-    with_bands = sig.select("node", *bands)
-    n_bands = len(bands)
-    # narrow band shuffle: (node, band_key) only; shingles re-joined for the
-    # surviving pairs
-    # materialize: referenced by bucket_sizes AND both self-join sides — the
+        bands.append(F.concat_ws("|", F.lit(str(b)), *cols))
+    # the shingles ride the band stack so the self-join verifies each pair
+    # in place (no re-join of shingles onto the pairs); materialized because
+    # the dropped-bucket count and both self-join sides read it — the
     # signature md5 passes must not be recomputed per reference
-    stacked = with_bands.select(
-        "node",
-        F.explode(
-            F.array(*[F.col(f"band{i}") for i in range(n_bands)])
-        ).alias("band_key"),
+    return sig.select(
+        "node", "shingles", F.explode(F.array(*bands)).alias("band_key")
     ).localCheckpoint(eager=False)
-    return base, stacked
 
 
 def lsh_candidate_edges(
@@ -173,21 +150,18 @@ def lsh_candidate_edges(
     `max_bucket=None` (default) is exact. At corpus scale pass a cap: band
     buckets above it are dropped before the self-join (quadratic otherwise);
     the cap is a window count inside the self-join's own band_key shuffle."""
-    base, stacked = _surface_band_stack(
+    stacked = _surface_band_stack(
         surfaces, surface_col, shingle_k, num_hashes, band_size
     )
-    return _edges_from_stack(
-        base, stacked, jaccard_threshold, max_bucket
-    )
+    return _edges_from_stack(stacked, jaccard_threshold, max_bucket)
 
 
 def _edges_from_stack(
-    base: DataFrame,
     stacked: DataFrame,
     jaccard_threshold: float,
     max_bucket: int | None,
 ) -> DataFrame:
-    """Edges from a precomputed (base, stacked) band stack — split out so
+    """Edges from a precomputed band stack — split out so
     canonicalize_mentions can share ONE stack between its dropped-bucket
     count and the candidate self-join instead of hashing twice."""
     if max_bucket is not None:
@@ -202,23 +176,23 @@ def _edges_from_stack(
             .where(F.col("_bsz") <= max_bucket)
             .drop("_bsz")
         )
-    a = stacked.select("band_key", F.col("node").alias("src"))
-    b_ = stacked.select("band_key", F.col("node").alias("dst"))
-    pairs = (
-        a.join(b_, "band_key")
-        .where(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .dropDuplicates(["src", "dst"])
+    a = stacked.select(
+        "band_key", F.col("node").alias("src"), F.col("shingles").alias("src_sh")
     )
-    src_sh = base.select(F.col("node").alias("src"), F.col("shingles").alias("src_sh"))
-    dst_sh = base.select(F.col("node").alias("dst"), F.col("shingles").alias("dst_sh"))
-    pairs = pairs.join(src_sh, "src").join(dst_sh, "dst")
+    b_ = stacked.select(
+        "band_key", F.col("node").alias("dst"), F.col("shingles").alias("dst_sh")
+    )
     inter = F.size(F.array_intersect(F.col("src_sh"), F.col("dst_sh")))
     union = F.size(F.col("src_sh")) + F.size(F.col("dst_sh")) - inter
+    # a pair sharing several bands is verified once per shared band; the
+    # jaccard is a function of the pair, so deduping after the filter keeps
+    # exactly the verified pairs
     return (
-        pairs.withColumn("jaccard", inter / union)
+        a.join(b_, "band_key")
+        .where(F.col("src") < F.col("dst"))
+        .select("src", "dst", (inter / union).alias("jaccard"))
         .where(F.col("jaccard") >= jaccard_threshold)
-        .select("src", "dst", "jaccard")
+        .dropDuplicates(["src", "dst"])
     )
 
 
@@ -350,11 +324,11 @@ def connected_components(
         # (and the single-pass explode halves that lineage vs a self-union)
         .localCheckpoint()
     )
-    spark = edges.sparkSession
-    small = und.limit(driver_threshold + 1).count() <= driver_threshold
-    if small:
+    # one action probes the size and, below the threshold, is the collect
+    rows = und.limit(driver_threshold + 1).collect()
+    if len(rows) <= driver_threshold:
         return _driver_side_components(
-            spark, [(r["src"], r["dst"]) for r in und.collect()]
+            edges.sparkSession, [(r["src"], r["dst"]) for r in rows]
         )
     return connected_components_star(und, max_iter=max_iter)
 
@@ -394,9 +368,7 @@ def canonicalize_mentions(
     # ONE band stack shared between the dropped-bucket count and the
     # candidate self-join (the stack is localCheckpoint-pinned inside); the
     # count is one tiny extra aggregate over already-materialized rows
-    base, stacked = _surface_band_stack(
-        surfaces, "surface_norm", shingle_k, 16, 4
-    )
+    stacked = _surface_band_stack(surfaces, "surface_norm", shingle_k, 16, 4)
     if max_bucket is not None:
         dropped = (
             stacked.groupBy("band_key")
@@ -415,11 +387,11 @@ def canonicalize_mentions(
                 "assignment is approximate for those surfaces",
                 max_bucket, dropped["n_buckets"], dropped["n_rows"],
             )
-    edges = _edges_from_stack(
-        base, stacked, jaccard_threshold, max_bucket
-    )
+    edges = _edges_from_stack(stacked, jaccard_threshold, max_bucket)
     comps = connected_components(edges)
-    # singletons (no edges) keep themselves as component
+    # singletons (no edges) keep themselves as component; both CC paths
+    # label a component with its minimum node, which is its
+    # lexicographically smallest normalized surface — the canonical form
     comps_full = (
         surfaces.join(comps, surfaces.surface_norm == comps.node, "left")
         .select(
@@ -427,23 +399,21 @@ def canonicalize_mentions(
             F.coalesce(F.col("component"), F.col("surface_norm")).alias("component"),
         )
     )
-    canonical = comps_full.groupBy("component").agg(
-        F.min("surface_norm").alias("canonical_surface")
-    )
-    surface_entity = comps_full.join(canonical, "component").select(
-        "surface_norm",
-        F.concat(F.lit("sf:"), F.col("canonical_surface")).alias("cc_entity_id"),
-    )
     m = mentions.withColumn("surface_norm", normalize_surface(F.col("surface")))
     if alias_dict is not None:
         m = link_entities(m, alias_dict)
     else:
         m = m.withColumn("linked_entity_id", F.lit(None).cast("string"))
-    mapped = (
-        m.join(surface_entity, "surface_norm", "left")
-        .select(
-            "mention_id",
-            F.coalesce(F.col("linked_entity_id"), F.col("cc_entity_id")).alias("entity_id"),
-        )
+    # a surface with nothing left after normalization (non-ASCII script,
+    # punctuation only) names no entity: null keeps its raw surface
+    # downstream instead of merging every such mention into one 'sf:' id
+    entity_id = F.when(
+        F.length("surface_norm") > 0,
+        F.coalesce(
+            F.col("linked_entity_id"), F.concat(F.lit("sf:"), F.col("component"))
+        ),
+    )
+    mapped = m.join(comps_full, "surface_norm", "left").select(
+        "mention_id", entity_id.alias("entity_id")
     )
     return mapped, comps_full

@@ -5,7 +5,7 @@ The reference runs transformer inference inside its pipeline
 src/pytorch_ie/model.py:37-40). This container ships no `transformers`, so:
 
   - the *plumbing* (per-worker singleton load, Arrow-batched inference inside
-    mapInPandas, dynamic token-length bucketing, collate/unbatch) is real and
+    mapInPandas, in-batch token-length sorting, collate/unbatch) is real and
     exercised by every test, and
   - the default models are deterministic rule models that exactly reproduce
     the reference fixture annotations (tests/conftest.py corpus), standing in
@@ -165,7 +165,7 @@ class HFTokenClassificationModel:
     subword position (continuation subwords are ignored), padding/special
     positions have word_id None. Padding is dynamic to the
     longest-in-batch (transformer_token_classification.py:331-349), which
-    is what the upstream length bucketing keeps cheap.
+    is what the mention stage's in-batch length sort keeps cheap.
 
     The sandbox ships no torch/transformers: construction raises
     NotImplementedError THEN, but the full load->tokenize->forward->

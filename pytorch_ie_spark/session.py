@@ -37,6 +37,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
+        # static conf: the generated-class LRU must hold a pass's working
+        # set, or every warm pass recompiles. Measured working sets: 141
+        # classes per kg_build benchmark pass, 90 per incremental-ingest
+        # pass; with Spark's default of 100 a warm kg_build pass recompiled
+        # 127-129 of them
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # deterministic float handling for correctness comparisons
         .config("spark.sql.legacy.allowNegativeScaleOfDecimal", "true")
     )

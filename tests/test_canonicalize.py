@@ -192,3 +192,94 @@ def test_canonicalize_logs_dropped_buckets(spark, caplog):
         mapped, _ = canonicalize_mentions(mentions, max_bucket=10)
         mapped.count()
     assert any("dropped" in r.message for r in caplog.records)
+
+
+def test_empty_normalized_surfaces_get_no_entity_id(spark):
+    """Surfaces with nothing left after normalization (non-ASCII scripts,
+    punctuation only) must not collapse into one shared 'sf:' entity: they
+    get a null id, so relations_to_triples keeps their raw surfaces."""
+    from pytorch_ie_spark.operators.triples import relations_to_triples
+
+    m = _mentions(spark, ["北京", "Москва", "!!!", "Globex"])
+    mapping, _ = canonicalize_mentions(m)
+    ids = {r["mention_id"]: r["entity_id"] for r in mapping.collect()}
+    assert ids == {"m0": None, "m1": None, "m2": None, "m3": "sf:globex"}
+    rels = spark.createDataFrame(
+        [("d0", "m0", "m1", "located_in", 1.0, None), ("d0", "m2", "m3", "near", 1.0, None)],
+        "doc_id string, head_mention_id string, tail_mention_id string, "
+        "label string, score double, content_sha256 string",
+    )
+    triples = {
+        (r["subj"], r["pred"], r["obj"])
+        for r in relations_to_triples(rels, m, mapping).collect()
+    }
+    assert triples == {("北京", "located_in", "Москва"), ("!!!", "near", "sf:globex")}
+
+
+def test_canonical_id_is_min_normalized_surface_of_component(spark, monkeypatch):
+    """entity_id = 'sf:' + the smallest normalized surface of the mention's
+    component, on both connected-components paths (distributed star rounds
+    and driver union-find), for a chain-shaped and a random family graph."""
+    import functools
+    import random
+
+    from pytorch_ie_spark.operators import canonicalize as canon
+
+    rng = random.Random(11)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    walk = "".join(rng.choice(letters) for _ in range(40))
+    # sliding 12-char windows: each surface overlaps its neighbours, so the
+    # verified edges form one long chain-like component
+    chain = [walk[i : i + 12].upper() if i % 3 else walk[i : i + 12] for i in range(28)]
+    families = []
+    for _ in range(12):
+        base = "".join(rng.choice(letters) for _ in range(rng.randint(8, 12)))
+        for _ in range(rng.randint(1, 5)):
+            v = list(base)
+            op = rng.randrange(3)
+            if op == 0:
+                v.pop(rng.randrange(len(v)))
+            elif op == 1:
+                v.insert(rng.randrange(len(v) + 1), rng.choice(letters))
+            else:
+                v[rng.randrange(len(v))] = rng.choice(letters)
+            families.append("".join(v).title() + rng.choice(["", ".", " Inc"]))
+        families.append(base)
+    threshold = 0.5
+
+    def expected(m):
+        """'sf:' + min normalized surface per component, the components
+        taken by a plain union-find over the same verified LSH edges."""
+        norms = m.select(
+            "mention_id", normalize_surface(F.col("surface")).alias("n")
+        ).collect()
+        edges = lsh_candidate_edges(
+            m.select(normalize_surface(F.col("surface")).alias("surface_norm")),
+            jaccard_threshold=threshold,
+            max_bucket=1000,
+        ).collect()
+        parent = {r["n"]: r["n"] for r in norms}
+
+        def find(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for e in edges:
+            parent[find(e["src"])] = find(e["dst"])
+        groups = {}
+        for n in parent:
+            groups.setdefault(find(n), set()).add(n)
+        assert max(len(g) for g in groups.values()) >= 3
+        return {r["mention_id"]: "sf:" + min(groups[find(r["n"])]) for r in norms}
+
+    cases = [(m, expected(m)) for m in (_mentions(spark, chain), _mentions(spark, families))]
+    for driver_threshold in (0, 100_000):
+        monkeypatch.setattr(
+            canon,
+            "connected_components",
+            functools.partial(connected_components, driver_threshold=driver_threshold),
+        )
+        for m, want in cases:
+            mapping, _ = canonicalize_mentions(m, jaccard_threshold=threshold)
+            assert {r["mention_id"]: r["entity_id"] for r in mapping.collect()} == want

@@ -244,3 +244,32 @@ def test_pipeline_rejects_unknown_linker():
     # validation fires before any Spark work, so no session is needed
     with pytest.raises(ValueError, match="linker"):
         run_kg_pipeline(None, None, KgPipelineConfig(linker="genre"))
+
+
+def test_warm_pipeline_compiles_nothing(spark, sf_dir):
+    """A warm pass finds every generated class in Spark's codegen cache: a
+    staged pass builds more distinct classes than the 100-entry default
+    LRU holds, and every miss is a fresh Janino compile (~100 classes per
+    warm pass with the default)."""
+    from pytorch_ie_spark.sources.readers import source_files_from_documents
+
+    cfg = KgPipelineConfig(
+        ner_model="gazetteer_ner", re_model="cooccurrence_re", max_candidate_distance=40
+    )
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+    src = source_files_from_documents(spark, sf_dir)
+    assert len(run_kg_pipeline(spark, src, cfg).collect()) > 0
+    # AQE numbers whole-stage-codegen stages in the order it plans them,
+    # and that order can change between runs of one plan; a renumbered
+    # stage is new source and compiles again (4 classes in 1 of 10 warm
+    # runs). So the guard is that a warm run compiling nothing happens
+    # within 3 runs, which a too-small cache never allows.
+    warm = []
+    for _ in range(3):
+        before = compiles.getCount()
+        run_kg_pipeline(spark, src, cfg).collect()
+        warm.append(compiles.getCount() - before)
+        if warm[-1] == 0:
+            break
+    assert warm[-1] == 0, warm

@@ -71,15 +71,11 @@ def test_ivf_probes_are_broadcast(spark, sf001):
 
 
 def test_mention_stage_has_no_range_sampling(spark, sf001):
-    """bucket_by_length must not plan a RangePartitioning above the
+    """detect_mentions must not plan a RangePartitioning above the
     tokenize+window UDF: the RangePartitioner's sampling job would execute
-    the UDF a second time (a full extra pass at 100 TB). The plan must show
-    a plain hash exchange instead."""
-    from pytorch_ie_spark.operators.mentions import (
-        bucket_by_length,
-        detect_mentions,
-        encode_documents,
-    )
+    the UDF a second time (a full extra pass at 100 TB). Tokenize, window,
+    tag and decode are one Python pass."""
+    from pytorch_ie_spark.operators.mentions import detect_mentions
     from pytorch_ie_spark.sources.readers import read_table
 
     docs = read_table(spark, sf001, "documents").limit(50).select(
@@ -87,13 +83,9 @@ def test_mention_stage_has_no_range_sampling(spark, sf001):
         "text",
         F.sha2("text", 256).alias("content_sha256"),
     )
-    for df in (
-        bucket_by_length(encode_documents(docs)),
-        detect_mentions(docs),
-    ):
-        plan = _plan(df)
-        assert "rangepartitioning" not in plan.lower(), plan
-        assert "hashpartitioning" in plan.lower()
+    plan = _plan(detect_mentions(docs))
+    assert "rangepartitioning" not in plan.lower(), plan
+    assert plan.count("MapInPandas") == 1, plan
 
 
 def test_mentions_lineage_scan_is_parallel(spark, sf001):
